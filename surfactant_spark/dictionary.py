@@ -19,6 +19,7 @@ import hashlib
 import logging
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 
 logger = logging.getLogger(__name__)
 
@@ -266,9 +267,19 @@ class CompiledPattern:
     kind: str  # 'name' | 'content'
     pattern: str
     order: int
-    rx: "re.Pattern"
+    regex: str  # source of ``rx`` (matched case-insensitively)
     prefilter: tuple[str, ...]  # lowercase literals; any-hit gates the regex
     confidence: int
+
+    @cached_property
+    def rx(self) -> "re.Pattern":
+        """Compiled on first use.  A worker that unpickles the broadcast
+        dictionary compiles only the patterns its prefilter hits reach."""
+        return re.compile(self.regex, re.IGNORECASE)
+
+    def __getstate__(self) -> dict:
+        # pickle the source only; the unpickled copy compiles lazily
+        return {k: v for k, v in self.__dict__.items() if k != "rx"}
 
 
 @dataclass
@@ -283,12 +294,11 @@ class CompiledDictionary:
         return out
 
 
-def _name_regex(alias: str) -> "re.Pattern":
+def _name_regex(alias: str) -> str:
     # exact, case-insensitive, token-bounded (reference exact-name match:
-    # surfactant/infoextractors/native_lib_file.py:219-220)
-    return re.compile(
-        r"(?<![A-Za-z0-9])" + re.escape(alias) + r"(?![A-Za-z0-9])", re.IGNORECASE
-    )
+    # surfactant/infoextractors/native_lib_file.py:219-220).  re.escape
+    # makes it always valid, so it is never compiled up front.
+    return r"(?<![A-Za-z0-9])" + re.escape(alias) + r"(?![A-Za-z0-9])"
 
 
 # RetireJS-style version placeholder: the pattern DB writes a literal
@@ -334,7 +344,9 @@ def compile_dictionary(
         if lits is None:
             skipped.append((key, pat, why))
             continue
-        patterns.append(CompiledPattern(key, kind, pat, order, rx, lits, CONF_CONTENT))
+        cp = CompiledPattern(key, kind, pat, order, pat, lits, CONF_CONTENT)
+        cp.rx = rx  # validated above; keep it for driver-side use
+        patterns.append(cp)
     return CompiledDictionary(patterns=patterns, skipped=skipped)
 
 

@@ -8,17 +8,13 @@ has two parts:
 1. page nodes — already canonical by construction: ``p:<content_sha256>``
    (groupBy on the hash, no iteration needed);
 2. dictionary entities — aliases form an arbitrary graph, so canonical
-   IDs need **connected components**.  Spark has no CC primitive; this
-   implements min-label propagation with pointer jumping (hash-to-min):
-   each iteration (a) takes the min label over the 2-hop neighborhood
-   (two chained propagate+min steps), (b) compresses paths by joining
-   labels onto themselves twice.  Converges in O(log n) iterations;
-   every iteration is checkpointed so lineage stays flat —
-   executor-local by default, or a reliable ``checkpoint`` when
-   ``checkpoint_dir`` points at cluster storage.  The convergence probe
-   is FUSED into each round's materializing action (lazy checkpoint +
-   full-scan changed-count agg): one Spark job per round, where r4 paid
-   an eager checkpoint plus a separate probe join.
+   IDs need **connected components**.  The alias graph is
+   dictionary-sized and already on the driver, so
+   ``entity_canonical_map`` runs one union-find pass there.
+
+Corpus-sized graphs use the distributed ``connected_components``
+(min-label propagation with pointer jumping, one checkpointed job per
+round) or ``connected_components_star``.
 
 Canonical ID election is deterministic: the minimum sha256 over the
 component's member keys (FIXTURES.md §4), the analog of Surfactant's
@@ -27,10 +23,13 @@ keep-the-first-UUID merge (surfactant/sbomtypes/_sbom.py:219-263).
 
 from __future__ import annotations
 
+import hashlib
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..schema import ENTITY_MAP_SCHEMA
 
 
 def _round_checkpoint(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
@@ -56,6 +55,29 @@ def _round_checkpoint(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
 SMALL_GRAPH_EDGES = 100_000
 
 
+def _union_find(pairs) -> dict:
+    """node → component minimum over the undirected graph ``pairs``;
+    a self-edge ``(k, k)`` adds ``k`` as a singleton.  Unions hang the
+    larger root under the smaller, so every root is its component min."""
+    parent: dict = {}
+
+    def find(x):
+        r = parent.setdefault(x, x)
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
+
 def _small_graph_labels(
     edges: DataFrame, src: str, dst: str, threshold: int
 ) -> DataFrame | None:
@@ -78,29 +100,7 @@ def _small_graph_labels(
         return None
     rows = [(r[0], r[1]) for r in collected
             if r[0] is not None and r[1] is not None and r[0] != r[1]]
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    comps: dict = {}
-    for a, b in rows:
-        comps.setdefault(find(a), set()).update((a, b))
-    out = []
-    for members in comps.values():
-        m = min(members)
-        out.extend((n, m) for n in sorted(members))
+    out = list(_union_find(rows).items())
     from pyspark.sql.types import StructField, StructType
 
     dt = pairs.schema.fields[0].dataType
@@ -389,24 +389,18 @@ def entity_canonical_map(
     """→ (entity_key, canonical_id, member_keys) for every key in the
     dictionary or the alias-edge graph.
 
-    canonical_id = ``e:`` + min(sha256(member)) over the component.
-    """
-    edges = spark.createDataFrame(alias_edge_rows or [("_none_", "_none_")], ["a", "b"])
-    cc = connected_components(edges)
-    keys = spark.createDataFrame([(k,) for k in dict_keys], ["entity_key"])
-    all_nodes = (
-        cc.select(F.col("node").alias("entity_key"), "component")
-        .unionByName(
-            keys.join(cc, keys["entity_key"] == cc["node"], "left_anti").select(
-                "entity_key", F.col("entity_key").alias("component")
-            )
-        )
-        .where(F.col("entity_key") != "_none_")
-    )
-    comp_canon = all_nodes.groupBy("component").agg(
-        F.concat(F.lit("e:"), F.min(F.sha2(F.col("entity_key"), 256))).alias("canonical_id"),
-        F.sort_array(F.collect_set("entity_key")).alias("member_keys"),
-    )
-    return all_nodes.join(comp_canon, "component").select(
-        "entity_key", "canonical_id", "member_keys"
-    )
+    canonical_id = ``e:`` + min(sha256(member)) over the component;
+    member_keys = the component's sorted keys.  Returned as a local
+    frame: no Spark job runs until a consumer reads it."""
+    comp = _union_find([*alias_edge_rows, *((k, k) for k in dict_keys)])
+    keys = sorted(comp)
+    members: dict[str, list[str]] = {}
+    for k in keys:
+        members.setdefault(comp[k], []).append(k)
+    canon = {
+        root: "e:" + min(hashlib.sha256(m.encode()).hexdigest() for m in ms)
+        for root, ms in members.items()
+    }
+    rows = [(k, canon[comp[k]], members[comp[k]]) for k in keys]
+    # one partition: one snapshot file, one task for each reader
+    return spark.createDataFrame(rows, ENTITY_MAP_SCHEMA).coalesce(1)

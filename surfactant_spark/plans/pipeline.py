@@ -6,7 +6,7 @@ functions with materialized boundaries:
 
   stage 1 extract   pages → extracted           (narrow; Arrow UDF)
   stage 2 mentions  unique content → mentions   (broadcast dict, Arrow UDF)
-  stage 3 entity_map alias edges → canonical ids (union-find joins)
+  stage 3 entity_map alias edges → canonical ids (driver union-find)
   stage 4 nodes     groupBy-canonical merge     (shuffle)
   stage 5 edges     Uses/LinksTo/Contains joins (broadcast + skew-aware)
 
@@ -21,6 +21,7 @@ so we note it here rather than fake it).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 from dataclasses import dataclass
@@ -93,19 +94,22 @@ def run_pipeline(
 
     # ONE corpus-stats probe decides both the mention pre-dedup path and
     # whether Uses edges need a dedup shuffle (they don't when mentions
-    # ran over per-content rows) — the shared stats pass
+    # ran over per-content rows) — the shared stats pass.  Lazy: only a
+    # mentions or edges stage that actually computes pays for it, so a
+    # full resume never scans the extracted snapshot.
     from ..operators.mentions import CONTENT_DEDUP_THRESHOLD
     from ..stats import column_stats, dup_rate
 
-    content_stats = column_stats(extracted, "content_sha256")
-    mentions_unique = dup_rate(content_stats) >= CONTENT_DEDUP_THRESHOLD
+    @functools.cache
+    def content_stats() -> tuple[int, int]:
+        return column_stats(extracted, "content_sha256")
 
     fp_mentions = _fingerprint(__version__, "mentions", fp_extract, dict_fp)
     mentions = stage(
         "mentions",
         fp_mentions,
         lambda: detect_mentions(
-            content_for_detection(extracted, stats=content_stats), compiled
+            content_for_detection(extracted, stats=content_stats()), compiled
         ),
     )
 
@@ -132,7 +136,7 @@ def run_pipeline(
         fp_edges,
         lambda: build_edges(
             extracted, mentions, emap,
-            mentions_unique=mentions_unique,
+            mentions_unique=dup_rate(content_stats()) >= CONTENT_DEDUP_THRESHOLD,
             # injective ⟺ no alias edge joins two distinct keys (free
             # driver-side check on the dictionary-sized edge list);
             # non-injective maps need the Uses dedup even over

@@ -37,6 +37,16 @@ MENTIONS_SCHEMA = T.StructType(
     ]
 )
 
+# Canonical entity map (stage 3): one row per dictionary / alias-graph key.
+# The nullability is the layout committed entity_map snapshots carry.
+ENTITY_MAP_SCHEMA = T.StructType(
+    [
+        T.StructField("entity_key", T.StringType(), True),
+        T.StructField("canonical_id", T.StringType(), True),
+        T.StructField("member_keys", T.ArrayType(T.StringType(), False), False),
+    ]
+)
+
 # Extraction output: one row per page with decompressed/parsed fields.
 EXTRACTED_SCHEMA = T.StructType(
     [

@@ -10,6 +10,32 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(mem_total_kb: int | None) -> str:
+    """Default single-JVM heap: 16g, capped at 40% of host RAM.
+
+    In local mode the driver heap is all of executor memory, and a test
+    run or a kill/resume drill holds two or three such JVMs at once, so
+    a fixed 16g on a 16 GB host gets them OOM-killed.  Unknown host RAM
+    keeps 16g."""
+    if not mem_total_kb:
+        return "16g"
+    return f"{min(16 * 1024, mem_total_kb * 2 // 5 // 1024)}m"
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else the host's
+    :func:`default_driver_memory`."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next((int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")), None)
+    except OSError:
+        kb = None
+    return default_driver_memory(kb)
+
+
 # Defaults chosen for the sandbox (single JVM, 32 threads, 128 GiB).
 # At 100 TB / 1000 executors the same knobs are set by spark-submit conf;
 # shuffle.partitions should then be ~2-3x total cores and is overridden
@@ -46,12 +72,6 @@ _DEFAULTS = {
     ),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
-    # single-JVM local mode: driver heap IS executor memory.  16g is
-    # the measured sweet spot on this box — an oversized (48g) heap
-    # regressed UDF throughput ~4x (GC/allocation pathology), and big
-    # intermediates should flow through parquet stage boundaries, not
-    # the heap (localCheckpoint of multi-million-row frames spills).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
 }
 
 
@@ -69,7 +89,12 @@ def get_spark(
     """
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cores}]")
-    conf = dict(_DEFAULTS)
+    # single-JVM local mode: driver heap IS executor memory.  16g was
+    # the measured sweet spot on a 128 GiB host — an oversized (48g) heap
+    # regressed UDF throughput ~4x (GC/allocation pathology), and big
+    # intermediates should flow through parquet stage boundaries, not
+    # the heap (localCheckpoint of multi-million-row frames spills).
+    conf = {**_DEFAULTS, "spark.driver.memory": driver_memory()}
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:

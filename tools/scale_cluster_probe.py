@@ -65,7 +65,7 @@ def main() -> None:
         detect_mentions,
         unique_content,
     )
-    from surfactant_spark.session import _DEFAULTS
+    from surfactant_spark.session import _DEFAULTS, driver_memory
     from surfactant_spark.sources.pages import synth_pages
     from surfactant_spark.stats import column_stats, dup_rate
 
@@ -81,7 +81,7 @@ def main() -> None:
         .config("spark.executor.memory", f"{mem_mb}m")
         .config("spark.submit.pyFiles", pyzip)
     )
-    conf = dict(_DEFAULTS)
+    conf = {**_DEFAULTS, "spark.driver.memory": driver_memory()}
     conf["spark.sql.shuffle.partitions"] = str(max(2 * cores, 8))
     for k, v in conf.items():
         builder = builder.config(k, v)
